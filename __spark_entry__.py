@@ -9,6 +9,10 @@ oracle_sql(): DuckDB-equivalent ANSI SQL per query, run side-by-side by
 Float policy: every floating output column is rounded (6 dp) in BOTH
 engines, and ranks are computed over the rounded score, so last-ulp
 differences between JVM/NumPy/DuckDB libm never flip a hash or a rank.
+The ranked queries go through operators/scoring.top_k: one query_id
+row_number window, with a partial WindowGroupLimit that Spark plans
+below the window's exchange for k <= 1000
+(spark.sql.optimizer.windowGroupLimitThreshold).
 """
 
 from __future__ import annotations
@@ -316,7 +320,7 @@ def q_bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selectivity-routed top-k (operators/wand.auto_topk): binary
-    per-batch routing between WAND and salted-exhaustive by the
+    per-batch routing between WAND and exhaustive scoring by the
     measured cost model — rank+score identical to the exhaustive
     scorer either way, so the oracle is the SAME exhaustive ranked
     CTE. A zero batch-volume floor pins the sf0.01 QUERY_SET into the

@@ -66,13 +66,15 @@ def layout_grain(base_partitions: int, parallelism: int, n_docs: int) -> int:
     the even 64 (two full waves). Rounding to the BASE grain keeps the
     result a pure function of (est_rows, config) — never of core count
     — so every local[N] level of the scaling sweep still plans
-    identically (that protocol pins the layout explicitly anyway)."""
+    identically (that protocol pins the layout explicitly anyway). The
+    cap is rounded DOWN to a multiple of the shuffle grain for the same
+    reason: with more cores than shuffle partitions, 4 x cores need not
+    be a multiple of it."""
     need = -(-DESIGN_BATCH_WIDTH * max(0, n_docs) // SPILL_FREE_ENTRIES_PER_TASK)
     if need > base_partitions:
         need = -(-need // base_partitions) * base_partitions
-    return int(
-        min(4 * max(base_partitions, parallelism), max(base_partitions, need))
-    )
+    cap = 4 * max(base_partitions, parallelism) // base_partitions * base_partitions
+    return int(min(cap, max(base_partitions, need)))
 
 
 def idf_column(df_col, n_docs: int, method: str):

@@ -20,8 +20,8 @@ index and phrase-scored top-k as new engine surface, Spark-first:
 * Scoring treats the phrase as a pseudo-term: df = docs containing
   the phrase (window count per query — no driver action, no second
   pass over the match), idf from the index's idf policy, tf-normalized
-  BM25 exactly like a single-term query, then the engine's two-phase
-  salted top-k.
+  BM25 exactly like a single-term query, then the engine's window
+  top-k (scoring.top_k).
 
 Batch-first like the rest of the query path: `phrase_topk` takes a
 whole batch of phrases and runs ONE plan; per-batch cost amortizes
@@ -61,7 +61,7 @@ CANDIDATE_PRUNE_MIN_DOCS = 50_000
 PRUNE_HOT_DF_FRAC = 0.10
 
 
-@dataclass
+@dataclass(eq=False)
 class PositionalIndex:
     """Positional postings + the corpus constants BM25 needs."""
 
@@ -377,8 +377,8 @@ def phrase_topk(
     The phrase is scored as a pseudo-term: df = matched-doc count per
     query (a window count over the already-(query)-keyed match output —
     no second match pass, no driver action), idf via the index's idf
-    policy, standard tf normalization, then the engine's two-phase
-    salted top-k with the (desc round(score,6), asc doc_id) tie-break.
+    policy, standard tf normalization, then the engine's window top-k
+    (scoring.top_k) with the (desc round(score,6), asc doc_id) tie-break.
     """
     from pyspark.sql.window import Window
 
@@ -393,11 +393,7 @@ def phrase_topk(
         "score",
         idf_column(pdf, index.n_docs, index.method) * tf_norm,
     )
-    out = top_k(
-        scored.select("query_id", "doc_id", "tf", "score"),
-        k,
-        est_rows=len(phrases) * max(1, index.n_docs),
-    )
+    out = top_k(scored.select("query_id", "doc_id", "tf", "score"), k)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),
@@ -611,11 +607,7 @@ def proximity_topk(
         "score",
         idf_column(pdf, index.n_docs, index.method) * tf_norm,
     )
-    out = top_k(
-        scored.select("query_id", "doc_id", "tf", "score"),
-        k,
-        est_rows=len(queries) * max(1, index.n_docs),
-    )
+    out = top_k(scored.select("query_id", "doc_id", "tf", "score"), k)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),

@@ -350,9 +350,8 @@ class BayesianBM25SparkScorer:
     ) -> DataFrame:
         """Strategy dispatch for ONE width-capped query batch:
         -> top_k frame (query_id local to the batch)."""
-        est = len(qlists) * max(1, self._index.n_docs)
         if dense or strategy == "exhaustive":
-            return top_k(self._score(qlists, dense), k, est_rows=est)
+            return top_k(self._score(qlists, dense), k)
         from bayesian_bm25_js_spark.operators.wand import auto_topk, wand_topk
 
         if strategy == "wand":
@@ -361,7 +360,6 @@ class BayesianBM25SparkScorer:
             return wand_topk(
                 self._index, qdf, k,
                 block_max=self._block_max_cached(), terms_filter=terms,
-                est_rows=est,
             )
         # provider keeps block-max construction lazy: batches the
         # router sends to the exhaustive path never build it
@@ -394,10 +392,15 @@ class BayesianBM25SparkScorer:
         (tie-broken by ascending doc_id) via a bounded cross join —
         fixture scale only (VERDICT r01 "What's wrong" #2).
 
-        strategy: "auto" (default) routes each query by selectivity —
-        block-max WAND for selective queries, the salted exhaustive
-        scorer when even the rarest term is ubiquitous (wand.auto_topk;
-        all three strategies are rank-identical under the 6-dp policy).
+        strategy: "auto" (default) routes each batch by selectivity —
+        block-max WAND for selective batches, the exhaustive scorer when
+        the avoidable fan-out is too small to pay for pruning
+        (wand.auto_topk; all three strategies are rank-identical under
+        the 6-dp policy). Every path ranks through scoring.top_k: one
+        query_id window whose partial WindowGroupLimit keeps at most k
+        rows per query per partition before the shuffle (planned by
+        Spark for k <= spark.sql.optimizer.windowGroupLimitThreshold,
+        default 1000).
         "wand" / "exhaustive" force one path. dense=True implies
         exhaustive (pruning cannot zero-fill). router_floor overrides
         the router's min_prunable_postings with a box-fitted value

@@ -32,6 +32,7 @@ from typing import List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -61,6 +62,16 @@ def isin_filter(col_name: str, values) -> "F.Column":
     return F.expr(f"`{col_name}` IN ({lst})")
 
 
+_QUERY_SCHEMA = pa.schema(
+    [
+        ("query_id", pa.int64()),
+        ("pos", pa.int32()),
+        ("term", pa.string()),
+        ("is_first", pa.bool_()),
+    ]
+)
+
+
 def queries_to_df(spark: SparkSession, queries: Sequence[Sequence[str]]) -> DataFrame:
     """[[token,...], ...] -> (query_id, pos, term, is_first).
 
@@ -68,16 +79,21 @@ def queries_to_df(spark: SparkSession, queries: Sequence[Sequence[str]]) -> Data
     bm25.ts:110). is_first marks the first occurrence of a term within
     its query, so the scoring aggregate can count distinct matched
     terms with a plain conditional sum instead of a per-group hash set
-    (the overlap count feeds the tf prior, scorer.ts:549-564)."""
+    (the overlap count feeds the tf prior, scorer.ts:549-564).
+
+    Built as a typed Arrow table, so the relation is driver-local
+    (LocalTableScan) whatever the session's Arrow setting, empty
+    batches included: broadcasting it runs no Spark job. A frame made
+    from Python tuples plans as Scan ExistingRDD instead, and every
+    broadcast of it runs a Python-worker job."""
     rows = []
     for qid, tokens in enumerate(queries):
         seen = set()
         for pos, term in enumerate(tokens):
             rows.append((qid, pos, term, term not in seen))
             seen.add(term)
-    return spark.createDataFrame(
-        rows, "query_id long, pos int, term string, is_first boolean"
-    )
+    columns = list(zip(*rows)) or [[]] * len(_QUERY_SCHEMA)
+    return spark.createDataFrame(pa.table(columns, schema=_QUERY_SCHEMA))
 
 
 def probability_udf(
@@ -244,20 +260,10 @@ def densify_scores(
     )
 
 
-# Phase-1 grain target: rows one phase-1 task can sort entirely in
-# execution memory without spilling (profiled: ~1.9M rows/task spilled
-# ~2 GB at 2000 queries x 300k docs x 32 partitions; 470k/task at 128
-# partitions stayed in memory with headroom).
-P1_TARGET_ROWS = 500_000
-
-
 def top_k(
     scores: DataFrame,
     k: int,
-    two_phase: bool = True,
-    salt: int = 64,
     round_dp: Optional[int] = 6,
-    phase1_partitions: Optional[int] = None,
     est_rows: Optional[int] = None,
 ) -> DataFrame:
     """Per-query top-k with the mandatory (desc score, asc doc_id)
@@ -271,56 +277,22 @@ def top_k(
     6 dp, equal-at-6dp docs tie-break deterministically by doc_id.
     round_dp=None ranks raw-score bits (exact_order fixture parity).
 
-    two_phase=True (default, the scale path): a single window
-    partitioned only by query_id funnels EVERY scored doc of a query
-    through one task — the per-query skew bottleneck at 10^9 matched
-    docs. Phase 1 takes local top-k within (query_id, hash(doc_id) %
-    salt) slices — JVM-side window, never Python (an Arrow round-trip
-    of the full scored stream measured 3x slower); phase 2 ranks the
-    ≤ salt·k survivors per query. The global top-k is contained in the
-    union of slice top-ks, so the result is identical (same tie-break
-    in both phases).
+    One row_number window partitioned by query_id. For `rank <= k`
+    Spark plans a partial WindowGroupLimit inside the scoring stage,
+    below the window's one exchange: at most k rows per query per
+    partition cross the shuffle, so a hot query's whole scored stream
+    never funnels through one task. Spark does this only for
+    k <= spark.sql.optimizer.windowGroupLimitThreshold (default 1000);
+    above it the full stream is shuffled on query_id.
+
+    est_rows is unused; it is accepted so existing callers keep working.
     """
     sort_score = (
         F.col("score") if round_dp is None else F.round(F.col("score"), round_dp)
     )
-    order = [F.desc(sort_score), F.asc("doc_id")]
-    if two_phase:
-        # Phase 1 sorts the ENTIRE scored stream within its window
-        # groups; at the default shuffle grain (~1 partition per core)
-        # each task sorts scored_rows/partitions rows and spills
-        # (measured: 2 GB/batch at 2000 queries x 300k docs x 32
-        # partitions). Pin this one exchange explicitly on exactly the
-        # window keys, so the window adds NO second exchange, and pick
-        # its grain from est_rows (callers pass the driver-known upper
-        # bound n_queries x n_docs): coarse (= shuffle.partitions) when
-        # the stream fits one sort per task, up to 4x finer when it
-        # would spill. A FIXED 4x grain measured 1.8x slower on narrow
-        # batches (200 queries x 50k docs: tiny fine partitions with
-        # AQE off can't coalesce); without est_rows the scale-safe 4x
-        # is kept. The grain is a pure function of (est_rows, config),
-        # never of core count — every local[N] level of the scaling
-        # sweep runs the identical plan (the cap argument requires it).
-        scores = scores.withColumn(
-            "__slice", F.pmod(F.xxhash64("doc_id"), F.lit(salt))
-        )
-        base = int(
-            scores.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        if phase1_partitions is not None:
-            n_p1 = phase1_partitions
-        elif est_rows is None:
-            n_p1 = 4 * base
-        else:
-            n_p1 = base * min(
-                4, max(1, -(-int(est_rows) // (P1_TARGET_ROWS * base)))
-            )
-        scores = scores.repartition(n_p1, "query_id", "__slice")
-        w1 = Window.partitionBy("query_id", "__slice").orderBy(*order)
-        scores = scores.withColumn("__r1", F.row_number().over(w1)).filter(
-            F.col("__r1") <= k
-        ).drop("__r1", "__slice")
-    w = Window.partitionBy("query_id").orderBy(*order)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(sort_score), F.asc("doc_id")
+    )
     return (
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

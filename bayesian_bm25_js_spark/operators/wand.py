@@ -267,8 +267,12 @@ def route_queries(
       ~0.2) * Σ df over the tokens of queries that have at least one
       selective term (min df < hot_df_frac * n_docs — queries whose
       every term is ubiquitous have kept≈1, nothing to avoid). Below
-      min_prunable_postings the whole batch takes the salted
-      exhaustive scorer; above it, the whole batch takes WAND.
+      min_prunable_postings the whole batch takes the exhaustive
+      scorer; above it, the whole batch takes WAND. Both rank through
+      scoring.top_k, whose partial WindowGroupLimit keeps at most k
+      rows per query per partition before its one shuffle (for
+      k <= spark.sql.optimizer.windowGroupLimitThreshold, default
+      1000).
     * Measured regimes: at 100k files / 200 queries exhaustive wins
       outright (2.1s vs wand 3.0s — under the floor); at 300k files /
       1000 queries WAND wins 4x (13.5s vs 54.7s — over the floor).
@@ -387,91 +391,56 @@ def auto_topk(
     exact_order: bool = False,
     block_max_provider=None,
 ) -> DataFrame:
-    """Selectivity router: per query, pick block-max-WAND or the salted
+    """Selectivity router: per batch, pick block-max WAND or the
     exhaustive scorer — both rank-identical under the 6-dp policy, so
     routing is purely a cost decision (see route_queries for the
-    two-term cost model).
+    two-term cost model). Routing is binary: the whole batch takes one
+    path.
 
     BENCH_r02 measured the crossover: on a stop-word workload (every
     query's min-df term in 88% of docs) WAND was 3.8x SLOWER than the
-    salted exhaustive path — when even the rarest query term is
-    ubiquitous, the top-10 is irreducibly a full postings walk and the
+    exhaustive path — when even the rarest query term is ubiquitous,
+    the top-10 is irreducibly a full postings walk and the
     bounds/τ/survivor phases are pure overhead. Conversely, selective
     queries keep ~20% of blocks and skip 80% of the scoring fan-out.
 
     queries: the batch as Python token lists (driver knowledge — the
     same shape retrieve() takes). Routing costs one bounded df lookup
-    (route_queries); each branch then scans ONLY ITS OWN terms (the
-    In-filter that reaches the columnar scans is per-branch, so the two
-    branches split the postings scan instead of each paying the full
-    batch's). Both ranked outputs union into ONE plan — one job, both
-    branches' stages scheduled concurrently. query_id in the result
-    indexes into `queries`. A fully one-sided batch skips the other
-    branch entirely.
+    (route_queries); the chosen path scans only the batch's terms (the
+    In-filter reaches the columnar scans). Both paths rank through
+    scoring.top_k's partial-WindowGroupLimit window. query_id in the
+    result indexes into `queries`.
     """
     from bayesian_bm25_js_spark.operators.scoring import (
         queries_to_df,
         score_queries,
     )
 
-    hot_ids, rare_ids = route_queries(
+    _, wand_ids = route_queries(
         index, queries, hot_df_frac, min_prunable_postings
     )
-
-    def _qdf(ids):
-        rows = []
-        for qid in ids:
-            seen: set = set()
-            for pos, term in enumerate(queries[qid]):
-                rows.append((qid, pos, term, term not in seen))
-                seen.add(term)
-        return index.spark.createDataFrame(
-            rows, "query_id long, pos int, term string, is_first boolean"
-        )
-
-    parts = []
-    if hot_ids:
-        hot_terms = sorted({t for i in hot_ids for t in queries[i]})
-        parts.append(
-            top_k(
-                score_queries(
-                    index,
-                    _qdf(hot_ids),
-                    exact_order=exact_order,
-                    terms_filter=hot_terms,
-                ),
-                k,
-                est_rows=len(hot_ids) * index.n_docs,
-            )
-        )
-    if rare_ids:
-        rare_terms = sorted({t for i in rare_ids for t in queries[i]})
-        if block_max is None and block_max_provider is not None:
-            # lazy: the (possibly persisted) metadata table is only
-            # built when the batch actually routes through WAND
-            block_max = block_max_provider()
-        parts.append(
-            wand_topk(
-                index,
-                _qdf(rare_ids),
-                k,
-                block_max=block_max,
-                block_size=block_size,
-                exact_order=exact_order,
-                terms_filter=rare_terms,
-                est_rows=len(rare_ids) * index.n_docs,
-            )
-        )
-    if not parts:
+    qdf = queries_to_df(index.spark, queries)
+    terms = sorted({t for q in queries for t in q})
+    if not wand_ids:
         return top_k(
-            score_queries(index, queries_to_df(index.spark, queries)),
+            score_queries(
+                index, qdf, exact_order=exact_order, terms_filter=terms
+            ),
             k,
-            est_rows=len(queries) * index.n_docs,
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    if block_max is None and block_max_provider is not None:
+        # lazy: the (possibly persisted) metadata table is only
+        # built when the batch actually routes through WAND
+        block_max = block_max_provider()
+    return wand_topk(
+        index,
+        qdf,
+        k,
+        block_max=block_max,
+        block_size=block_size,
+        exact_order=exact_order,
+        terms_filter=terms,
+    )
 
 
 def _survivor_pack_shift(n_docs: int, block_size: int) -> int:
@@ -510,10 +479,7 @@ def wand_topk(
     broadcast_survivors: hint-broadcast the surviving token×block side
       of the scoring join (bounded by Σ_q tokens(q)·blocks(q); disable
       at extreme batch sizes and let AQE decide).
-    est_rows: scored-stream size bound (n_queries × n_docs) for the
-      final top-k's phase-1 grain (scoring.top_k) — callers that know
-      the batch width should pass it so narrow batches keep the coarse
-      exchange.
+    est_rows: unused; accepted so existing callers keep working.
     fused: True (default) runs the bounds/τ/survivor phases as ONE
       applyInPandas exchange (_fused_survivors); False forces the
       pure-Catalyst phases (_bounds_and_tau) — an explicit A/B knob
@@ -677,7 +643,7 @@ def wand_topk(
         .alias("tf_overlap"),
         F.first("dl").alias("dl"),
     )
-    ranked = top_k(scores, k, est_rows=est_rows)
+    ranked = top_k(scores, k)
     if not return_stats:
         return ranked
     return ranked, stats

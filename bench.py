@@ -9,7 +9,7 @@ Phases (timed separately, reported in "queries"):
   query_warm       the pure block-max-WAND path on the same workload
   query_exhaustive the unpruned scorer (the pruning speedup denominator)
   query_hot_term   every query contains the corpus's top-df term — the
-                   skew workload the salted two-phase top-k exists for
+                   skew workload the partial-limit top-k window bounds
   packed_*         posting compression: pack+write, packed-vs-row size,
                    query through the delta+varint layout
   plus the oracle-suite headliners at $SPARK_GRAFT_SF_DIR.
@@ -376,18 +376,14 @@ def run_bench(cpus: int) -> dict:
     qdf = queries_to_df(spark, workload)  # un-timed uses (stats leg)
 
     # All query legs execute under query_mode (AQE off for the action:
-    # bounded intermediates + explicit salting leave AQE only its
+    # bounded intermediates + the partial-limit top-k leave AQE only its
     # per-stage driver re-plan cost — profiled 19.6s -> 13.4s per
     # routed 1000-query batch at local[32]). Builds above keep AQE.
-    # BENCH_NO_EST_ROWS=1: perf-bisection toggle — leave top_k's
-    # phase-1 grain at its est_rows-free default
-    est_rows = None if os.environ.get("BENCH_NO_EST_ROWS") == "1" else len(workload) * n
-
     def run_wand():
         with query_mode(spark):
             ranked = wand_topk(
                 index, queries_to_df(spark, workload), 10, block_max=bm,
-                block_size=BLOCK_SIZE, terms_filter=terms, est_rows=est_rows,
+                block_size=BLOCK_SIZE, terms_filter=terms,
             )
             return calibrate(ranked, index, 1.0, 0.5, 0.05).count()
 
@@ -396,9 +392,7 @@ def run_bench(cpus: int) -> dict:
             scores = score_queries(
                 index, queries_to_df(spark, workload), terms_filter=terms
             )
-            return calibrate(
-                top_k(scores, 10, est_rows=est_rows), index, 1.0, 0.5, 0.05
-            ).count()
+            return calibrate(top_k(scores, 10), index, 1.0, 0.5, 0.05).count()
 
     def run_auto(wl):
         kw = {}
@@ -476,7 +470,7 @@ def run_bench(cpus: int) -> dict:
             f"(batch volume {batch_volume}, proxy {proxy:.0f}, "
             f"kept {blocks_kept_frac})")
 
-    # selectivity-routed flagship: per-query WAND vs salted-exhaustive
+    # selectivity-routed flagship: per-batch WAND vs exhaustive
     sc.setJobGroup("query_auto", "warm routed queries")
     auto = []
     for i in range(reps):
@@ -535,11 +529,10 @@ def run_bench(cpus: int) -> dict:
 
     # -- hot-term skew workload ----------------------------------------------
     # Every query contains the corpus's top-df term: the per-query
-    # scored set is ~the whole corpus, the workload the salted
-    # two-phase top-k exists for. Timed both ways: the single window
-    # partitioned only by query_id funnels each query's full scored
-    # stream through one task (the skew baseline); the salted two-phase
-    # variant slices it across (query_id, hash(doc_id) % 64) first.
+    # scored set is ~the whole corpus, the skew workload top_k's
+    # partial WindowGroupLimit bounds (at most k rows per query per
+    # partition cross its exchange). Timed through WAND, the exhaustive
+    # scorer and the router.
     if lean:
         top_term = None
     else:
@@ -559,19 +552,14 @@ def run_bench(cpus: int) -> dict:
                 a.append(time.time() - t0)
             return round(min(a), 3)
 
-        def hot_exhaustive(two_phase):
+        def hot_exhaustive():
             with query_mode(spark):
                 hot_scores = score_queries(
                     index, queries_to_df(spark, hot_wl), terms_filter=hot_terms
                 )
-                calibrate(
-                    top_k(hot_scores, 10, two_phase=two_phase,
-                          est_rows=len(hot_wl) * n),
-                    index, 1.0, 0.5, 0.05,
-                ).count()
+                calibrate(top_k(hot_scores, 10), index, 1.0, 0.5, 0.05).count()
 
-        timings["query_hot_salted"] = best2(lambda: hot_exhaustive(True))
-        timings["query_hot_onephase"] = best2(lambda: hot_exhaustive(False))
+        timings["query_hot_exhaustive"] = best2(hot_exhaustive)
         def hot_wand():
             with query_mode(spark):
                 calibrate(
@@ -585,9 +573,8 @@ def run_bench(cpus: int) -> dict:
         timings["query_hot_auto"] = best2(lambda: run_auto(hot_wl))
         log(f"[bench] hot-term workload (50 q, all containing '{top_term}', "
             f"df={index.term_stats.filter(F.col('term') == top_term).collect()[0]['df']}): "
-            f"wand {timings['query_hot_term']}s, exhaustive salted "
-            f"{timings['query_hot_salted']}s vs single-window "
-            f"{timings['query_hot_onephase']}s, routed {timings['query_hot_auto']}s")
+            f"wand {timings['query_hot_term']}s, exhaustive "
+            f"{timings['query_hot_exhaustive']}s, routed {timings['query_hot_auto']}s")
 
     # -- positional retrieval legs (hot-term shapes) ---------------------------
     # phrase_hot: selective phrases (hot keyword + rare identifier) —
@@ -679,8 +666,7 @@ def run_bench(cpus: int) -> dict:
         # varint decode — the realistic packed query pattern
         with query_mode(spark):
             calibrate(
-                top_k(score_queries(pidx, small_qdf, terms_filter=small_terms),
-                      10, est_rows=len(small_wl) * n),
+                top_k(score_queries(pidx, small_qdf, terms_filter=small_terms), 10),
                 pidx, 1.0, 0.5, 0.05,
             ).count()
         timings["packed_query_50"] = round(time.time() - t0, 3)

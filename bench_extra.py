@@ -192,7 +192,6 @@ def profile_packed_query(spark, path, timings):
     pidx, _ = load_packed_index(spark, path)
     wl = build_workload(200)[:50]
     terms = sorted({t for q in wl for t in q})
-    n = pidx.n_docs
     sc = spark.sparkContext
 
     sc.setJobDescription("extra: packed scan+decode noop")
@@ -206,8 +205,7 @@ def profile_packed_query(spark, path, timings):
         with query_mode(spark):
             calibrate(
                 top_k(score_queries(pidx, queries_to_df(spark, wl),
-                                    terms_filter=terms),
-                      10, est_rows=len(wl) * n),
+                                    terms_filter=terms), 10),
                 pidx, 1.0, 0.5, 0.05,
             ).count()
 

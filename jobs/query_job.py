@@ -13,10 +13,15 @@ Local smoke:
   spark-submit jobs/query_job.py --index /tmp/idx --queries /tmp/q.txt
 
 Results: (query_id, rank, doc_id, score, probability) — query_id indexes
-into the input line order. --strategy auto routes each query between
-block-max WAND and the salted exhaustive scorer by measured cost
+into the input line order. --strategy auto routes each batch between
+block-max WAND and the exhaustive scorer by measured cost
 (operators/wand.route_queries); wand/exhaustive force one path. All
 strategies are rank-identical under the engine's round(score, 6) policy.
+Every strategy ranks through operators/scoring.top_k: one query_id
+row_number window, below whose exchange Spark plans a partial
+WindowGroupLimit, so at most k rows per query per partition are
+shuffled. Spark plans it only for
+k <= spark.sql.optimizer.windowGroupLimitThreshold (default 1000).
 """
 
 from __future__ import annotations

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bayesian_bm25_js_spark.operators.phrase import (
+    PositionalIndex,
     build_positional_index,
     phrase_match,
     phrase_topk,
@@ -460,3 +461,12 @@ def test_prune_hot_query_gate(spark):
         assert base == off
     finally:
         _ph.CANDIDATE_PRUNE_MIN_DOCS = orig
+
+
+def test_positional_index_is_hashable():
+    """Identity semantics: an index can key a cache, and == never
+    reaches DataFrame.__eq__ (which returns a Column)."""
+    a = PositionalIndex(None, 1, 1.0, 1.2, 0.75, "lucene")
+    b = PositionalIndex(None, 1, 1.0, 1.2, 0.75, "lucene")
+    assert {a: 1, b: 2}[a] == 1
+    assert a == a and a != b

@@ -2,7 +2,7 @@
 
 These pin the plans, not just the results: query side broadcast, filter
 pushdown into parquet scans, column pruning, bounded shuffle counts,
-and two-phase top-k equivalence.
+and the partial-limit top-k.
 """
 
 import re
@@ -62,14 +62,43 @@ def test_saved_postings_pushdown(spark, idx, tmp_path):
     assert "idf" not in rs and "dl" not in rs, rs
 
 
-def test_two_phase_topk_identical(spark, idx):
+def _topk_chain(df):
+    """Top-k operators from the plan root down to the scoring
+    aggregate (the first HashAggregate) or the first multi-child node;
+    WindowGroupLimit is tagged with its mode, TakeOrderedAndProject
+    with its limit."""
+    node = df._jdf.queryExecution().executedPlan()
+    chain = []
+    while True:
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            node = node.initialPlan()
+            continue
+        name = node.nodeName()
+        if name == "HashAggregate" or node.children().size() != 1:
+            return chain
+        if name == "WindowGroupLimit":
+            chain.append(f"WindowGroupLimit {node.mode()}")
+        elif name == "TakeOrderedAndProject":
+            chain.append(f"{name} {node.limit()}")
+        elif name in ("Window", "Exchange"):
+            chain.append(name)
+        node = node.children().apply(0)
+
+
+PARTIAL_TOPK = ["Window", "WindowGroupLimit Final", "Exchange", "WindowGroupLimit Partial"]
+
+
+def test_topk_one_exchange_partial_limit(spark, idx):
+    """top_k adds exactly one shuffle on top of the scoring plan, and
+    a partial WindowGroupLimit below it keeps at most k rows per query
+    per partition: a hot query's scored stream never crosses the
+    exchange whole."""
     qdf = queries_to_df(spark, [["cat"], ["dog", "the"], ["machine", "learning"]])
     scores = score_queries(idx, qdf)
-    one = top_k(scores, 3, two_phase=False).orderBy("query_id", "rank").collect()
-    two = top_k(scores, 3, two_phase=True, salt=4).orderBy("query_id", "rank").collect()
-    assert [(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in one] == [
-        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in two
-    ]
+    ranked = top_k(scores, 3)
+    assert count_exchanges(ranked) == count_exchanges(scores) + 1, plan_string(ranked)
+    assert _topk_chain(ranked) == PARTIAL_TOPK, plan_string(ranked)
+    assert "hashpartitioning(query_id#" in plan_string(ranked)
 
 
 def test_dense_path_not_used_by_default_retrieve_sparse(spark, idx):
@@ -120,10 +149,11 @@ def test_wand_scoring_join_is_broadcast(spark, idx):
     assert "CartesianProduct" not in plan_string(ranked)
 
 
-def test_multi_field_retrieve_two_phase_topk(spark):
+def test_multi_field_retrieve_partial_topk(spark):
     """Multi-field retrieve must not rank through a single-partition
-    window: phase 1 slices candidates by (query_id, hash(doc_id)%salt)
-    before the constant-query_id phase-2 window (VERDICT r02 #4)."""
+    window over every candidate (VERDICT r02 #4). Under its constant
+    query_id Spark drops the window key and plans the limit as a
+    TakeOrderedAndProject: a per-partition top-k before one merge."""
     from bayesian_bm25_js_spark.operators.multi_field import MultiFieldSparkScorer
 
     docs = spark.createDataFrame(
@@ -135,9 +165,7 @@ def test_multi_field_retrieve_two_phase_topk(spark):
     )
     mf = MultiFieldSparkScorer(["title", "body"]).index(docs)
     out = mf.retrieve(["cat", "dog"], k=5)
-    plan = plan_string(out)
-    # phase-1 salt expression must appear among the window partition keys
-    assert "pmod" in plan.lower(), plan
+    assert _topk_chain(out) == ["Window", "TakeOrderedAndProject 5"], plan_string(out)
     rows = out.orderBy("rank").collect()
     assert [r["rank"] for r in rows] == list(range(1, 6))
 
@@ -204,44 +232,14 @@ def test_postings_scan_idf_carry_modes(spark, idx):
         assert "idf" not in names, names
 
 
-def test_topk_phase1_single_fine_exchange(spark, idx):
-    """Phase-1 top-k repartitions on exactly the window keys at 4x the
-    shuffle grain: the window must reuse that exchange (no second
-    shuffle of the full scored stream) — the 2 GB/batch sort-spill fix
-    depends on both properties."""
-    scores = score_queries(idx, queries_to_df(spark, [["cat", "dog"]]))
-    base = count_exchanges(scores)
-    ranked = top_k(scores, 3)
-    # phase-1 repartition + phase-2 query_id exchange: exactly two on
-    # top of the scoring plan — a third would mean the window re-added
-    # its own shuffle after the explicit repartition.
-    assert count_exchanges(ranked) == base + 2, plan_string(ranked)
-    expected = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    plan = plan_string(ranked)
-    assert "hashpartitioning(query_id" in plan, plan
-    assert f", {expected})" in plan, plan
+def test_wand_topk_one_exchange_partial_limit(spark, idx):
+    """The WAND path ranks through the same top_k: one query_id
+    exchange above its scoring aggregate, with the partial limit
+    below it."""
+    from bayesian_bm25_js_spark.operators.wand import wand_topk
 
-
-def test_topk_phase1_grain_adapts_to_est_rows(spark, idx):
-    """The phase-1 grain is a pure function of the caller's scored-row
-    estimate: coarse (= shuffle.partitions) for narrow batches — a
-    fixed 4x grain measured 1.8x slower at 200 queries x 50k docs with
-    AQE off — and 4x finer when the stream would spill a per-task
-    sort. Never a function of core count (scaling-sweep invariance)."""
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    scores = score_queries(idx, queries_to_df(spark, [["cat", "dog"]]))
-
-    def p1_grains(df):
-        plan = plan_string(df)
-        return {
-            int(m)
-            for m in re.findall(
-                r"hashpartitioning\(query_id#\d+L?, __slice#\d+L?, (\d+)\)", plan
-            )
-        }
-
-    assert p1_grains(top_k(scores, 3, est_rows=1000)) == {base}
-    assert p1_grains(top_k(scores, 3, est_rows=10**9)) == {4 * base}
+    ranked = wand_topk(idx, queries_to_df(spark, [["cat", "dog"], ["the"]]), 3)
+    assert _topk_chain(ranked) == PARTIAL_TOPK, plan_string(ranked)
 
 
 def test_layout_grain_sizing():
@@ -259,6 +257,9 @@ def test_layout_grain_sizing():
     assert layout_grain(32, 32, 300_000) == 128
     assert layout_grain(32, 32, 100_000) == 64
     assert layout_grain(32, 32, 10_000_000) == 128
+    # the 4x cap is rounded DOWN to the shuffle grain too: 4 x 36 cores
+    # would be 144, a ragged last wave of 16 tasks
+    assert layout_grain(32, 36, 10_000_000) == 128
     assert layout_grain(32, 2, 300_000) == layout_grain(32, 32, 300_000)
 
 

@@ -203,3 +203,82 @@ def test_score_queries_empty_terms_filter(spark, small_idx):
         small_idx, queries_to_df(spark, [["cat"]]), terms_filter=[]
     )
     assert out.count() == 0
+
+
+QUERY_SCHEMA = "struct<query_id:bigint,pos:int,term:string,is_first:boolean>"
+
+
+def test_queries_to_df_is_local_relation(spark):
+    """The query side plans as a driver-local LocalTableScan, so its
+    broadcast runs no Spark job — with or without Arrow enabled."""
+    from bayesian_bm25_js_spark.plans.audit import simple_plan
+
+    prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", arrow)
+            plan = simple_plan(queries_to_df(spark, [["cat", "dog"], ["w1"]]))
+            assert plan.startswith("LocalTableScan"), plan
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
+
+
+def test_queries_to_df_keeps_duplicates_with_is_first(spark):
+    rows = queries_to_df(spark, [["a", "b", "a", "a"], ["b", "b"]]).collect()
+    assert [tuple(r) for r in rows] == [
+        (0, 0, "a", True),
+        (0, 1, "b", True),
+        (0, 2, "a", False),
+        (0, 3, "a", False),
+        (1, 0, "b", True),
+        (1, 1, "b", False),
+    ]
+
+
+def test_queries_to_df_round_trips_awkward_terms(spark):
+    terms = ["o'brien", 'say "hi"', "back\\slash", "naïve", "日本語", "😀", ""]
+    rows = queries_to_df(spark, [terms]).collect()
+    assert [r["term"] for r in rows] == terms
+
+
+def test_queries_to_df_empty_batch_schema(spark):
+    for batch in ([], [[]]):
+        df = queries_to_df(spark, batch)
+        assert df.schema.simpleString() == QUERY_SCHEMA
+        assert df.collect() == []
+
+
+def test_topk_matches_driver_sort_across_partitions(spark):
+    """top_k (partial limit per partition, then the final window)
+    equals a driver-side sort on (desc round(score, 6), asc doc_id),
+    with each query's 6-dp ties spread over several partitions."""
+    k = 10
+    rows = [
+        # few distinct 6-dp values -> large tie groups; the sub-quantum
+        # offset makes tied raw scores differ in their low bits
+        (q, d, 0.25 * ((d * 7 + q) % 5) + 1e-8 * (d % 4))
+        for q in range(3)
+        for d in range(200)
+    ]
+    df = spark.createDataFrame(
+        rows, "query_id long, doc_id long, score double"
+    ).repartition(6)
+    placed = df.select(
+        "query_id", "doc_id", F.spark_partition_id().alias("part")
+    ).collect()
+    parts = {(r["query_id"], r["doc_id"]): r["part"] for r in placed}
+
+    expected = []
+    for q in range(3):
+        mine = sorted(
+            (r for r in rows if r[0] == q), key=lambda r: (-round(r[2], 6), r[1])
+        )[:k]
+        # the top tie group of every query spans several partitions
+        assert len({parts[(q, d)] for _, d, _ in mine}) > 1
+        expected += [(q, rank, d, s) for rank, (_, d, s) in enumerate(mine, 1)]
+
+    got = [
+        (r["query_id"], r["rank"], r["doc_id"], r["score"])
+        for r in top_k(df, k).orderBy("query_id", "rank").collect()
+    ]
+    assert got == expected

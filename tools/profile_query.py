@@ -12,7 +12,7 @@ That residual is the quantity the 8→32 scaling pair loses to — stages
 parallelize with cores, the residual does not.
 
 Usage: python tools/profile_query.py [cpus] [n_files] [n_queries] [mode]
-  mode: "exhaustive" (salted scorer, default) | "auto" (routed default
+  mode: "exhaustive" (exhaustive scorer, default) | "auto" (routed default
   path — the scaling protocol's leg) | "wand"
 """
 
