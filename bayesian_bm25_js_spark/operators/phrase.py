@@ -403,39 +403,6 @@ def phrase_topk(
     )
 
 
-def _min_cover_counts_ref(rows, window: int) -> np.ndarray:
-    """Reference scalar minimal-cover counter (classic two-pointer
-    enumeration), kept as the parity oracle for the vectorized kernel
-    below. rows: iterable of slot-position-list rows (None slots
-    allowed). tf = number of minimal windows whose span fits."""
-    out = np.zeros(len(rows), dtype="int32")
-    for i, row in enumerate(rows):
-        lists = [lst for lst in row if lst is not None]
-        k = len(lists)
-        if k == 1:
-            out[i] = len(lists[0])
-            continue
-        events = sorted((int(p), s) for s, lst in enumerate(lists) for p in lst)
-        counts = [0] * k
-        covered = left = tf = 0
-        for right, (pos_r, slot_r) in enumerate(events):
-            if counts[slot_r] == 0:
-                covered += 1
-            counts[slot_r] += 1
-            if covered < k:
-                continue
-            while counts[events[left][1]] > 1:
-                counts[events[left][1]] -= 1
-                left += 1
-            if pos_r - events[left][0] + 1 <= window:
-                tf += 1
-            counts[events[left][1]] -= 1
-            covered -= 1
-            left += 1
-        out[i] = tf
-    return out
-
-
 def _min_cover_counts_vec(rows, window: int) -> np.ndarray:
     """Vectorized minimal-cover counter (VERDICT r4 next #4): one
     segmented NumPy pass over ALL rows' occurrence events instead of a
@@ -523,7 +490,7 @@ def _min_cover_counts_vec(rows, window: int) -> np.ndarray:
 def _min_cover_count_udf(window: int, counter=None):
     """Arrow-batched minimal-cover counter over pivoted slot position
     arrays (see _min_cover_counts_vec for the math and the scale
-    argument; _min_cover_counts_ref pins parity in test_phrase). The
+    argument; a two-pointer reference pins parity in test_phrase). The
     heavy filtering (term pruning, full-slot coverage) already
     happened in Catalyst before this kernel sees a row.
 

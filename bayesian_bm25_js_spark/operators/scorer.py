@@ -287,7 +287,8 @@ class BayesianBM25SparkScorer:
     def _score(self, queries: Sequence[Sequence[str]], dense: bool) -> DataFrame:
         spark = self._index.spark
         qdf = queries_to_df(spark, queries)
-        scores = score_queries(self._index, qdf)
+        terms = sorted({tok for q in queries for tok in q})
+        scores = score_queries(self._index, qdf, terms_filter=terms)
         if dense:
             qids = spark.createDataFrame(
                 [(i,) for i in range(len(queries))], "query_id long"

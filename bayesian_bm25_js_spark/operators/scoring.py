@@ -127,17 +127,64 @@ def probability_udf(
     return _prob
 
 
-def score_queries(
+def filter_terms(df: DataFrame, terms: Sequence[str]) -> DataFrame:
+    """Keep the rows of `terms`: on the interned 8-byte term_id when
+    the table has one (the columnar scan then never reads the string),
+    else on the term string."""
+    if "term_id" in df.columns:
+        from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
+
+        return df.filter(isin_filter("term_id", [spark_xxhash64(t) for t in terms]))
+    return df.filter(isin_filter("term", terms))
+
+
+def probe_postings(
     index: InvertedIndex,
     query_terms: DataFrame,
-    exact_order: bool = False,
     terms_filter: Optional[Sequence[str]] = None,
-    carry_idf: bool = False,
 ) -> DataFrame:
-    """-> (query_id, doc_id, score, tf_overlap, dl) for matched docs only.
+    """Broadcast the query tokens into the postings ->
+    (query_id, doc_id, pos, is_first, tf, dl, idf, plus the term_id or
+    term join key), one row per (query token, matching posting).
 
-    Sparse output: docs with no matching term are absent (score
-    semantically 0).
+    terms_filter: the batch's distinct terms, when known client-side.
+    It In-filters the postings scan, and the sorted caches skip whole
+    batches on it. idf is read from the postings relation; no
+    term_stats join is added per batch.
+    """
+    qt = query_terms
+    if "is_first" not in qt.columns:
+        qt = qt.withColumn("is_first", F.lit(True))
+    postings = index.postings
+    if (
+        terms_filter is not None
+        and getattr(index, "push_string_filter", False)
+        and "term_id" in postings.columns
+    ):
+        # Layouts whose term_id only exists POST-scan (the packed
+        # delta+varint store computes it after decode) opt in to a
+        # STRING In-predicate too: term IN (...) reaches the parquet
+        # row-group stats, so non-matching blocks are skipped before
+        # any varint decode runs. The interned row cache skips this —
+        # its term_id filter already batch-prunes, and an extra
+        # per-row string compare would cost the hot path.
+        postings = postings.filter(isin_filter("term", terms_filter))
+    join_key = "term"
+    if "term_id" in postings.columns:
+        # Interned hot path: probe on 8-byte keys; the columnar scan
+        # prunes the string column entirely.
+        join_key = "term_id"
+        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
+        postings = postings.drop("term")
+    if terms_filter is not None:
+        postings = filter_terms(postings, terms_filter)
+    return postings.join(F.broadcast(qt), join_key)
+
+
+def aggregate_scores(
+    index: InvertedIndex, joined: DataFrame, exact_order: bool = False
+) -> DataFrame:
+    """probe_postings rows -> (query_id, doc_id, score, tf_overlap, dl).
 
     exact_order=False (default, the scale path): plain float64 SUM —
     whole-stage-codegen'd HashAggregate with map-side combine; shuffle
@@ -154,75 +201,8 @@ def score_queries(
     fixture-parity runs only.
     """
     contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        qt = qt.withColumn("is_first", F.lit(True))
-    postings = index.postings
-    # carry_idf=False (default since r5): r4 moved idf to the broadcast
-    # query side (vocab-sized term_stats join per batch) to avoid
-    # decompressing the postings cache's idf column per row, but
-    # same-session A/Bs read it as a per-batch FIXED cost with no
-    # measurable scan saving: 50k docs/200 q — warm WAND CPU 12.4s vs
-    # 8.2s with it off (-34%); 300k docs/2000 q — 374.6/382.6 vs 376.8
-    # (neutral, inside noise). Off wins or ties everywhere measured;
-    # carry_idf=True is the explicit A/B knob for larger-shape re-runs
-    # (was the invisible SPARK_CARRY_IDF env switch, VERDICT r5 #2).
-    # The packed layout keeps its own vocab join (push_string_filter
-    # marks it): its postings view already attaches idf post-decode,
-    # and dropping the column there would not remove the join.
-    carry_idf = (
-        carry_idf
-        and "idf" in postings.columns
-        and index.term_stats is not None
-        and not getattr(index, "push_string_filter", False)
-    )
-    if carry_idf:
-        # hint-broadcast the tiny query side: at 100M+ vocab the
-        # static planner must never pick a sort-merge join that
-        # shuffles term_stats per batch
-        qt = F.broadcast(qt).join(
-            index.term_stats.select("term", "idf"), "term"
-        )
-        postings = postings.drop("idf")
-    join_key = "term"
-    if (
-        terms_filter is not None
-        and "term" in postings.columns
-        and (
-            getattr(index, "push_string_filter", False)
-            or "term_id" not in postings.columns
-        )
-    ):
-        # Layouts whose term_id only exists POST-scan (the packed
-        # delta+varint store computes it after decode) opt in to a
-        # STRING In-predicate too: term IN (...) reaches the parquet
-        # row-group stats, so non-matching blocks are skipped before
-        # any varint decode runs. The interned row cache skips this —
-        # its term_id filter below already batch-prunes, and an extra
-        # per-row string compare would cost the hot path. Custom
-        # layouts with NO term_id at all fall back to the string
-        # filter unconditionally so terms_filter is never a silent
-        # no-op (the only pruning such a layout can get).
-        postings = postings.filter(isin_filter("term", terms_filter))
-    if "term_id" in postings.columns:
-        # Interned hot path: probe/filter on 8-byte keys; the columnar
-        # scan prunes the string column entirely.
-        join_key = "term_id"
-        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
-        postings = postings.drop("term")
-        if terms_filter is not None:
-            from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
-
-            ids = [spark_xxhash64(t) for t in terms_filter]
-            postings = postings.filter(isin_filter("term_id", ids))
-
-    joined = postings.join(F.broadcast(qt), join_key).select(
-        "query_id",
-        "doc_id",
-        "pos",
-        "is_first",
-        "dl",
-        contrib.alias("contrib"),
+    scored = joined.select(
+        "query_id", "doc_id", "pos", "is_first", "dl", contrib.alias("contrib")
     )
     if exact_order:
         score_agg = F.aggregate(
@@ -232,12 +212,29 @@ def score_queries(
         )
     else:
         score_agg = F.sum("contrib")
-    return joined.groupBy("query_id", "doc_id").agg(
+    return scored.groupBy("query_id", "doc_id").agg(
         score_agg.alias("score"),
         F.sum(F.when(F.col("is_first"), 1).otherwise(0))
         .cast("int")
         .alias("tf_overlap"),
         F.first("dl").alias("dl"),
+    )
+
+
+def score_queries(
+    index: InvertedIndex,
+    query_terms: DataFrame,
+    exact_order: bool = False,
+    terms_filter: Optional[Sequence[str]] = None,
+) -> DataFrame:
+    """-> (query_id, doc_id, score, tf_overlap, dl) for matched docs only.
+
+    Sparse output: docs with no matching term are absent (score
+    semantically 0). See probe_postings for terms_filter and
+    aggregate_scores for exact_order.
+    """
+    return aggregate_scores(
+        index, probe_postings(index, query_terms, terms_filter), exact_order
     )
 
 

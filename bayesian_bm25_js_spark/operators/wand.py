@@ -21,16 +21,19 @@ safe pruning as three declarative phases over the block-max metadata
 Safety: every doc in a pruned block scores ≤ ub < τ - ε ≤ kth best
 actual score minus ε, so with ε = one 6-dp rounding quantum the pruned
 rounded-rank top-k ≡ the exhaustive rounded-rank top-k (monotonicity
-of round; see the surviving-filter comment). Verified in
+of round; see ROUND_SLACK). Verified in
 tests/test_index_hardening.py.
 
-Physical shape (profiled at 400k docs / 150 queries / local[32]):
-  * block_max is scanned ONCE per batch — the token join result is
-    repartitioned by query_id so phases A and B read one reused
-    exchange instead of re-scanning the 20M-row cache each;
-  * the surviving (query, token, block) table is BROADCAST into the
-    postings join, so postings keep their doc_id partitioning (full
-    map-side combining) and pruned blocks never emit a fan-out row;
+Physical shape:
+  * phases A-C run as ONE applyInPandas exchange keyed on query_id
+    (_fused_survivors): block_max is scanned once per batch, joined to
+    the broadcast query tokens, and each query's bounds/τ/keep math is
+    a few thousand NumPy rows;
+  * the surviving blocks are BROADCAST as packed
+    (query_id << shift) + block_id longs (__qb) and probed right after
+    the postings' query-token join, so postings keep their doc_id
+    partitioning (full map-side combining) and pruned blocks die in the
+    same codegen stage, before the score aggregate;
   * callers that know the workload's term set pass terms_filter so the
     sorted in-memory caches batch-prune the scans (the in-memory
     analogue of the term-bucketed parquet layout's bucket pruning).
@@ -49,7 +52,14 @@ from bayesian_bm25_js_spark.operators.compression import (
     block_max_table,
 )
 from bayesian_bm25_js_spark.operators.index_build import InvertedIndex
-from bayesian_bm25_js_spark.operators.scoring import top_k
+from bayesian_bm25_js_spark.operators.scoring import (
+    aggregate_scores,
+    filter_terms,
+    probe_postings,
+    queries_to_df,
+    score_queries,
+    top_k,
+)
 
 # One 6-dp rounding quantum: ranking is on round(score, 6) (top_k float
 # policy). Pruning at raw τ could drop a doc whose raw score is < τ but
@@ -60,33 +70,15 @@ from bayesian_bm25_js_spark.operators.scoring import top_k
 ROUND_SLACK = 1e-6
 
 
-def _term_key(block_max: DataFrame, query_terms: DataFrame):
-    """-> (join_key, qt): intern query terms when the metadata table is
-    term_id-keyed (preferred — long keys, string column pruned)."""
-    if "term_id" in block_max.columns:
-        return "term_id", query_terms.withColumn(
-            "term_id", F.xxhash64("term")
-        ).drop("term")
-    return "term", query_terms
+def _fused_survivors(
+    block_max: DataFrame, query_terms: DataFrame, k: int,
+    with_stats: bool = False,
+) -> DataFrame:
+    """bounds → τ → surviving blocks in ONE shuffle + one Arrow pass.
 
-
-def wand_block_bounds(block_max: DataFrame, query_terms: DataFrame) -> DataFrame:
-    """Phase A only (kept for API/tests): per-(query, block) bounds.
-    ub sums over query TOKENS (duplicates double-count, bm25.ts:110)."""
-    key, qt = _term_key(block_max, query_terms)
-    qb = block_max.join(F.broadcast(qt.select("query_id", key)), key)
-    return qb.groupBy("query_id", "block_id").agg(
-        F.sum("max_contrib").alias("ub"),
-        F.max("max_contrib").alias("lb"),
-    )
-
-
-def _bounds_and_tau(
-    block_max: DataFrame, query_terms: DataFrame, k: int
-) -> tuple[DataFrame, DataFrame]:
-    """One block_max scan -> (bounds, tau).
-
-    τ(q) = max of two witness rules:
+    Per query, ub and lb are phase A's block bounds, and a block
+    survives when ub ≥ τ − ROUND_SLACK. τ(q) is the max of two witness
+    rules (τ = -∞ when neither applies):
 
     Rule 1 (distinct blocks): each block holds ≥1 doc scoring ≥ lb, so
     the kth largest lb over blocks is achieved by k distinct docs
@@ -94,91 +86,15 @@ def _bounds_and_tau(
 
     Rule 2 (single-term counts): for one term t, every one of the
     n(t, b) docs in block b scores ≥ min_contrib(t, b); walking blocks
-    in descending min_contrib until the cumulative count reaches k
-    yields k distinct docs scoring ≥ that block's min_contrib. Taking
-    the best term maximizes the bound; witnesses never mix terms, so
-    no doc is double-counted.
-    """
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        w_first = Window.partitionBy("query_id", "term").orderBy("pos")
-        qt = qt.withColumn("is_first", F.row_number().over(w_first) == 1)
-    key, qt = _term_key(block_max, qt)
-    # ONE scan of block_max; the repartition materializes an exchange
-    # that both downstream aggregations reuse (profiled: without it the
-    # 20M-row cache is scanned once per phase).
-    qb = block_max.join(
-        F.broadcast(qt.select("query_id", key, "is_first")), key
-    ).repartition("query_id")
+    in descending min_contrib (ties by block_id) until the cumulative
+    count reaches k yields k distinct docs scoring ≥ that block's
+    min_contrib. Taking the best term maximizes the bound; witnesses
+    never mix terms, so no doc is double-counted. is_first dedupes
+    duplicate query tokens here, while ub counts them twice.
 
-    bounds = qb.groupBy("query_id", "block_id").agg(
-        F.sum("max_contrib").alias("ub"),
-        F.max("max_contrib").alias("lb"),
-    )
-
-    # rule 1
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("lb"), F.asc("block_id"))
-    rule1 = (
-        bounds.withColumn("__rn", F.row_number().over(w1))
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.min(F.when(F.col("__rn") <= k, F.col("lb"))).alias("kth_lb"),
-        )
-        .select(
-            "query_id",
-            F.when(F.col("n_blocks") >= k, F.col("kth_lb")).alias("tau1"),
-        )
-    )
-
-    # rule 2 (is_first dedupes duplicate query tokens)
-    per_term = qb.filter(F.col("is_first"))
-    w2 = Window.partitionBy("query_id", key).orderBy(
-        F.desc("min_contrib"), F.asc("block_id")
-    )
-    cum = per_term.withColumn("__cum", F.sum("n").over(w2))
-    tau_t = (
-        cum.filter((F.col("__cum") >= k) & (F.col("__cum") - F.col("n") < k))
-        .groupBy("query_id", key)
-        .agg(F.max("min_contrib").alias("tau_t"))
-    )
-    rule2 = tau_t.groupBy("query_id").agg(F.max("tau_t").alias("tau2"))
-
-    tau = (
-        rule1.join(rule2, "query_id", "outer")
-        .select(
-            "query_id",
-            F.coalesce(
-                F.greatest("tau1", "tau2"),
-                F.col("tau1"),
-                F.col("tau2"),
-                F.lit(float("-inf")),
-            ).alias("tau"),
-        )
-    )
-    return bounds, tau
-
-
-def wand_thresholds(
-    block_max: DataFrame, query_terms: DataFrame, bounds: DataFrame, k: int
-) -> DataFrame:
-    """Back-compat wrapper: τ per query (bounds arg kept for signature
-    stability; the fused path recomputes internally)."""
-    _, tau = _bounds_and_tau(block_max, query_terms, k)
-    return tau
-
-
-def _fused_survivors(
-    block_max: DataFrame, query_terms: DataFrame, k: int,
-    with_stats: bool = False,
-) -> DataFrame:
-    """bounds → τ → surviving blocks in ONE shuffle + one Arrow pass.
-
-    Semantically identical to _bounds_and_tau + the ub ≥ τ − ε filter
-    (same two witness rules, same tie-breaks — see _bounds_and_tau's
-    docstring for the math), but fused into a single applyInPandas
-    keyed on query_id: the Catalyst formulation costs ~6 small stages
-    (bounds groupBy, two τ windows + three aggregations, the τ join)
+    The same math as Catalyst phases (bounds groupBy, two τ windows,
+    three aggregations, the τ join — tests/test_index_hardening.py
+    keeps that formulation as the parity oracle) costs ~6 small stages
     whose walls are scheduling latency, not work — a fixed per-batch
     tail that caps N→4N scaling (profiled: ~4s of the 13.4s routed
     1000-query batch at local[32] sits in sub-second stages). Here the
@@ -203,7 +119,11 @@ def _fused_survivors(
     if "is_first" not in qt.columns:
         w_first = Window.partitionBy("query_id", "term").orderBy("pos")
         qt = qt.withColumn("is_first", F.row_number().over(w_first) == 1)
-    key, qt = _term_key(block_max, qt)
+    key = "term"
+    if "term_id" in block_max.columns:
+        # term_id-keyed metadata: probe on 8-byte keys
+        key = "term_id"
+        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
     qb = block_max.join(
         F.broadcast(qt.select("query_id", key, "is_first")), key
     ).select("query_id", key, "block_id", "max_contrib", "min_contrib", "n", "is_first")
@@ -411,11 +331,6 @@ def auto_topk(
     scoring.top_k's partial-WindowGroupLimit window. query_id in the
     result indexes into `queries`.
     """
-    from bayesian_bm25_js_spark.operators.scoring import (
-        queries_to_df,
-        score_queries,
-    )
-
     _, wand_ids = route_queries(
         index, queries, hot_df_frac, min_prunable_postings
     )
@@ -464,10 +379,7 @@ def wand_topk(
     return_stats: bool = False,
     exact_order: bool = False,
     terms_filter: Optional[Sequence[str]] = None,
-    broadcast_survivors: bool = True,
     est_rows: Optional[int] = None,
-    fused: bool = True,
-    carry_idf: bool = False,
 ):
     """Pruned top-k: rank-identical to the exhaustive scorer under the
     engine's 6-dp rounded ranking.
@@ -476,49 +388,19 @@ def wand_topk(
     terms_filter: the workload's distinct terms, when known client-side
       — prunes the cached columnar scans batch-wise (sorted-by-term
       caches make the In-filter stats-effective).
-    broadcast_survivors: hint-broadcast the surviving token×block side
-      of the scoring join (bounded by Σ_q tokens(q)·blocks(q); disable
-      at extreme batch sizes and let AQE decide).
     est_rows: unused; accepted so existing callers keep working.
-    fused: True (default) runs the bounds/τ/survivor phases as ONE
-      applyInPandas exchange (_fused_survivors); False forces the
-      pure-Catalyst phases (_bounds_and_tau) — an explicit A/B knob
-      (was the invisible WAND_FUSED env switch; both paths are
-      rank-identical and tested).
     Returns the ranked DataFrame (query_id, doc_id, score, tf_overlap,
     dl, rank); with return_stats=True also (blocks_total, blocks_kept)
     measured on the SAME survivor path the ranking used.
     """
     if block_max is None:
         block_max = block_max_table(index, block_size)
-
-    from bayesian_bm25_js_spark.operators.scoring import isin_filter
-
-    def _isin_key(df: DataFrame):
-        if "term_id" in df.columns:
-            from bayesian_bm25_js_spark.functions.xxh64 import spark_xxhash64
-
-            ids = [spark_xxhash64(t) for t in terms_filter]
-            return df.filter(isin_filter("term_id", ids))
-        return df.filter(isin_filter("term", terms_filter))
-
     if terms_filter is not None:
-        block_max = _isin_key(block_max)
+        block_max = filter_terms(block_max, terms_filter)
 
-    stats = None
-    if not fused:
-        bounds, tau = _bounds_and_tau(block_max, query_terms, k)
-        keep = F.col("ub") >= F.col("tau") - F.lit(ROUND_SLACK)
-        bt = bounds.join(tau, "query_id")
-        surviving = bt.filter(keep).select("query_id", "block_id")
-        if return_stats:
-            stats = bt.groupBy("query_id").agg(
-                F.count(F.lit(1)).alias("blocks_total"),
-                F.sum(F.when(keep, 1).otherwise(0)).alias("blocks_kept"),
-            )
-    elif return_stats:
-        # stats ride the PRODUCTION fused kernel: kept rows double as
-        # the survivor set, the per-query blocks_total rides each row.
+    if return_stats:
+        # stats ride the production kernel: kept rows double as the
+        # survivor set, the per-query blocks_total rides each row.
         # localCheckpoint (eager), not persist: the materialized blocks
         # are shared by the ranking and the stats frame, and the
         # ContextCleaner releases them automatically once the caller
@@ -538,55 +420,18 @@ def wand_topk(
             F.count("block_id").alias("blocks_kept"),
         )
     else:
-        # production path: one fused exchange instead of ~6 small stages
         surviving = _fused_survivors(block_max, query_terms, k)
-
-    contrib = index.tf_norm_column(F.col("tf"), F.col("dl")) * F.col("idf")
-    qt = query_terms
-    if "is_first" not in qt.columns:
-        qt = qt.withColumn("is_first", F.lit(True))
-
-    postings = index.postings
-    # carry_idf=False (default since r5): the denormalized idf column is
-    # read straight from the postings cache. carry_idf=True rides idf on
-    # the broadcast query side instead (vocab-sized term_stats join per
-    # batch) — same measured trade-off, rationale, and packed-layout
-    # carve-out as score_queries; the explicit parameter replaces the
-    # invisible SPARK_CARRY_IDF env switch (VERDICT r5 #2).
-    carry_idf = (
-        carry_idf
-        and "idf" in postings.columns
-        and index.term_stats is not None
-        and not getattr(index, "push_string_filter", False)
-    )
-    if carry_idf:
-        # hint-broadcast the tiny query side: at 100M+ vocab the
-        # static planner must never pick a sort-merge join that
-        # shuffles term_stats per batch
-        qt = F.broadcast(qt).join(
-            index.term_stats.select("term", "idf"), "term"
-        )
-        postings = postings.drop("idf")
-    join_key = "term"
-    if "term_id" in postings.columns:
-        join_key = "term_id"
-        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
-        postings = postings.drop("term")
-    if terms_filter is not None:
-        postings = _isin_key(postings)
 
     # Push the pruning into the scoring stage as TWO chained broadcast
     # hash joins: postings probe the (tiny, token-count-sized) query
-    # side on term_id, then the packed (query_id << shift | block_id)
-    # survivor set. Both probes pipeline inside one whole-stage-codegen
-    # span, so a pruned (query, block) pair dies at the second probe
-    # without ever materializing into the aggregation — same guarantee
-    # as joining on (term_id, block_id) directly, but the driver never
-    # builds the tokens×blocks product broadcast (measured 2.8M rows /
-    # ~125 MB and ~1.5 s of serial build per 2000-query batch at 300k
-    # docs; the two small sides are ~6k rows + ~8 MB packed longs).
-    # Broadcasting keeps postings doc_id-partitioned -> full map-side
-    # combining of the score aggregation.
+    # side, then the packed (query_id << shift | block_id) survivor
+    # set. Both probes pipeline inside one whole-stage-codegen span,
+    # so a pruned (query, block) pair dies at the second probe before
+    # its contrib is computed — same guarantee as joining on
+    # (term_id, block_id) directly, but the driver never builds the
+    # tokens×blocks product broadcast (measured 2.8M rows / ~125 MB and
+    # ~1.5 s of serial build per 2000-query batch at 300k docs; the
+    # two small sides are ~6k rows + ~8 MB packed longs).
     #
     # The shift is sized from the index itself (_survivor_pack_shift):
     # block ids reach n_docs // block_size, which overflows the 32 low
@@ -596,54 +441,14 @@ def wand_topk(
     # (thousands), far under 2^(63-shift) even at 10^14 docs
     # (shift 40 -> 8M ids).
     shift = _survivor_pack_shift(index.n_docs, block_size)
-    pack = F.shiftleft(F.col("query_id"), shift) + F.col("block_id")
-    if broadcast_survivors:
-        surv = F.broadcast(surviving.select(pack.alias("__qb")))
-        joined = (
-            postings.withColumn(
-                "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
-            )
-            .join(F.broadcast(qt), join_key)
-            .withColumn("__qb", pack)
-            .join(surv, "__qb")
-            .select(
-                "query_id", "doc_id", "pos", "is_first", "dl",
-                contrib.alias("contrib"),
-            )
-        )
-    else:
-        # shuffle fallback for extreme batch sizes: one combined join
-        # keyed on (term, block) so the shuffled side stays bounded
-        qt_blocks = qt.join(surviving, "query_id").select(
-            "query_id", "pos", "is_first", join_key, "block_id",
-            *(["idf"] if carry_idf else []),
-        )
-        joined = (
-            postings.withColumn(
-                "block_id", F.floor(F.col("doc_id") / block_size).cast("long")
-            )
-            .join(qt_blocks, [join_key, "block_id"])
-            .select(
-                "query_id", "doc_id", "pos", "is_first", "dl",
-                contrib.alias("contrib"),
-            )
-        )
-    if exact_order:
-        score_agg = F.aggregate(
-            F.array_sort(F.collect_list(F.struct("pos", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        )
-    else:
-        score_agg = F.sum("contrib")
-    scores = joined.groupBy("query_id", "doc_id").agg(
-        score_agg.alias("score"),
-        F.sum(F.when(F.col("is_first"), 1).otherwise(0))
-        .cast("int")
-        .alias("tf_overlap"),
-        F.first("dl").alias("dl"),
+    qid = F.shiftleft(F.col("query_id"), shift)
+    surv = F.broadcast(surviving.select((qid + F.col("block_id")).alias("__qb")))
+    joined = (
+        probe_postings(index, query_terms, terms_filter)
+        .withColumn("__qb", qid + F.floor(F.col("doc_id") / block_size))
+        .join(surv, "__qb")
     )
-    ranked = top_k(scores, k)
+    ranked = top_k(aggregate_scores(index, joined, exact_order), k)
     if not return_stats:
         return ranked
     return ranked, stats

@@ -13,8 +13,7 @@ Phases (timed separately, reported in "queries"):
   packed_*         posting compression: pack+write, packed-vs-row size,
                    query through the delta+varint layout
   plus the oracle-suite headliners at $SPARK_GRAFT_SF_DIR.
-  BENCH_LEAN=1 (scaling trials) keeps build + auto + wand legs only;
-  BENCH_PIPE=1 adds the multi-batch overlap A/B (negative result).
+  BENCH_LEAN=1 (scaling trials) keeps build + auto + wand legs only.
 
 Also reported: wand_blocks_kept/total (pruning power) and per-phase
 executor-CPU totals (from the event log) — the scaling evidence needs
@@ -487,46 +486,6 @@ def run_bench(cpus: int) -> dict:
         f"{qps_auto} q/s (wand {query_s:.2f}s, exhaustive "
         f"{timings.get('query_exhaustive', '-')}s)")
 
-    # Pipelined multi-batch overlap — kept as an opt-in A/B
-    # (BENCH_PIPE=1) because it is a MEASURED NEGATIVE RESULT at this
-    # architecture: splitting a batch into PIPE_BATCHES concurrent jobs
-    # multiplies the per-batch block_max/postings metadata scans, which
-    # a single batch amortizes across all its queries. Probe at 300k
-    # files / 1000 queries / local[32]: single batch 15.9s (62.8 q/s)
-    # vs 4x250 depth-2 pipeline 34.9s (28.6 q/s) with executor CPU
-    # inflated to 305s/run — the idle-slot filling never pays back the
-    # duplicated scans. The engine's in-batch parallelism already
-    # overlaps the router's two branches inside ONE job (auto_topk
-    # union), so the deployment knob for high core counts is BIGGER
-    # batches, not more jobs.
-    qps_pipe = None
-    if os.environ.get("BENCH_PIPE") == "1":
-        pipe_batches = int(os.environ.get("BENCH_PIPE_BATCHES", "4"))
-        pipe_depth = int(os.environ.get("BENCH_PIPE_DEPTH", "2"))
-
-        def run_pipelined():
-            from concurrent.futures import ThreadPoolExecutor
-
-            parts = [workload[i::pipe_batches] for i in range(pipe_batches)]
-
-            def one(wl):
-                sc.setLocalProperty("spark.jobGroup.id", "query_pipe")
-                ranked = auto_topk(index, wl, 10, block_max=bm, block_size=BLOCK_SIZE)
-                return calibrate(ranked, index, 1.0, 0.5, 0.05).count()
-
-            with ThreadPoolExecutor(max_workers=pipe_depth) as ex:
-                return sum(ex.map(one, parts))
-
-        pipe = []
-        for _ in range(3):
-            t0 = time.time()
-            run_pipelined()
-            pipe.append(time.time() - t0)
-        timings["query_pipelined"] = round(statistics.median(pipe), 3)
-        qps_pipe = round(N_QUERIES / timings["query_pipelined"], 2)
-        log(f"[bench] pipelined ({pipe_batches} batches, depth {pipe_depth}): "
-            f"median {timings['query_pipelined']}s = {qps_pipe} q/s")
-
     # -- hot-term skew workload ----------------------------------------------
     # Every query contains the corpus's top-df term: the per-query
     # scored set is ~the whole corpus, the skew workload top_k's
@@ -762,9 +721,8 @@ def run_bench(cpus: int) -> dict:
         # flagship = the routed path (the engine's default retrieve
         # strategy), one batch — batches amortize the metadata scans,
         # so a service maximizes throughput by batching wide, not by
-        # splitting into concurrent jobs (see the BENCH_PIPE A/B)
+        # splitting into concurrent jobs (measured 2.2x slower)
         "qps_top10_calibrated": qps_auto,
-        "qps_pipelined": qps_pipe,
         "qps_wand": qps,
         "wand_blocks_kept_frac": blocks_kept_frac,
         "router_floor_fitted": router_floor,
@@ -776,7 +734,6 @@ def run_bench(cpus: int) -> dict:
         "cpu_s_build": round(cpu.get("build", 0.0), 1),
         "cpu_s_query_warm": round(cpu.get("query", 0.0) / reps, 1),
         "cpu_s_query_auto": round(cpu.get("query_auto", 0.0) / reps, 1),
-        "cpu_s_query_pipe": round(cpu.get("query_pipe", 0.0) / 3, 1),
         **extras,
     }
 
@@ -1021,8 +978,8 @@ def _write_scaling_report(results, levels, hw_cpu, hw_mem, trials,
             "one batch amortizes across all its queries, and the "
             "router already overlaps its two branches inside one job. "
             "The throughput knob at high core counts is batch WIDTH "
-            "(scan amortization), not job concurrency; re-run with "
-            "BENCH_PIPE=1.\n\nRaw trials:\n\n```\n"
+            "(scan amortization), not job concurrency.\n\nRaw "
+            "trials:\n\n```\n"
             + "\n".join(
                 f"local[{c}] trial {i}: {r['files_per_sec']} f/s, "
                 f"{r['qps_top10_calibrated']} q/s, cpu(q) {r['cpu_s_query_auto']}s"
@@ -1178,7 +1135,7 @@ if __name__ == "__main__":
             _shed_sf1_detail,
             lambda r: [r.pop(k, None) for k in
                        ("ivf_recall", "route_proxy_volume",
-                        "route_floor_used", "cpu_s_query_pipe")],
+                        "route_floor_used")],
             _shed_minor_query_legs,
             # "queries" is a contract field — last resort only
             lambda r: r.pop("queries", None),

@@ -443,6 +443,70 @@ def test_query_mode_toggles_and_restores(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled", "true") == prev
 
 
+def _bounds_and_tau(block_max, query_terms, k):
+    """Catalyst parity oracle for wand._fused_survivors -> (bounds, tau).
+
+    The same bounds and two witness rules as the production kernel's
+    docstring, written as plain Spark phases: bounds groupBy, rule 1's
+    kth-largest-lb window, rule 2's per-term cumulative-count window,
+    and the outer join that takes the larger τ (-∞ when neither rule
+    applies)."""
+    from pyspark.sql.window import Window
+
+    qt = query_terms
+    if "is_first" not in qt.columns:
+        w_first = Window.partitionBy("query_id", "term").orderBy("pos")
+        qt = qt.withColumn("is_first", F.row_number().over(w_first) == 1)
+    key = "term_id" if "term_id" in block_max.columns else "term"
+    if key == "term_id":
+        qt = qt.withColumn("term_id", F.xxhash64("term")).drop("term")
+    qb = block_max.join(F.broadcast(qt.select("query_id", key, "is_first")), key)
+
+    bounds = qb.groupBy("query_id", "block_id").agg(
+        F.sum("max_contrib").alias("ub"),
+        F.max("max_contrib").alias("lb"),
+    )
+
+    # rule 1: kth largest lb over distinct blocks
+    w1 = Window.partitionBy("query_id").orderBy(F.desc("lb"), F.asc("block_id"))
+    rule1 = (
+        bounds.withColumn("__rn", F.row_number().over(w1))
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_blocks"),
+            F.min(F.when(F.col("__rn") <= k, F.col("lb"))).alias("kth_lb"),
+        )
+        .select(
+            "query_id",
+            F.when(F.col("n_blocks") >= k, F.col("kth_lb")).alias("tau1"),
+        )
+    )
+
+    # rule 2: best single-term count witness (is_first dedupes
+    # duplicate query tokens)
+    w2 = Window.partitionBy("query_id", key).orderBy(
+        F.desc("min_contrib"), F.asc("block_id")
+    )
+    cum = qb.filter(F.col("is_first")).withColumn("__cum", F.sum("n").over(w2))
+    tau_t = (
+        cum.filter((F.col("__cum") >= k) & (F.col("__cum") - F.col("n") < k))
+        .groupBy("query_id", key)
+        .agg(F.max("min_contrib").alias("tau_t"))
+    )
+    rule2 = tau_t.groupBy("query_id").agg(F.max("tau_t").alias("tau2"))
+
+    tau = rule1.join(rule2, "query_id", "outer").select(
+        "query_id",
+        F.coalesce(
+            F.greatest("tau1", "tau2"),
+            F.col("tau1"),
+            F.col("tau2"),
+            F.lit(float("-inf")),
+        ).alias("tau"),
+    )
+    return bounds, tau
+
+
 def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
     """The applyInPandas survivors kernel must keep exactly the blocks
     the Catalyst bounds/tau phases keep — same witness rules, same
@@ -451,7 +515,6 @@ def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
     from bayesian_bm25_js_spark.operators.compression import block_max_table
     from bayesian_bm25_js_spark.operators.wand import (
         ROUND_SLACK,
-        _bounds_and_tau,
         _fused_survivors,
     )
 
@@ -481,29 +544,43 @@ def test_fused_survivors_matches_catalyst_phases(spark, rnd_index):
 
 
 def test_fused_stats_match_catalyst_stats(spark, rnd_index):
-    """return_stats now rides the PRODUCTION fused kernel (ADVICE r4);
-    its (blocks_total, blocks_kept) must equal the Catalyst phases' —
-    including for queries that keep zero blocks (the null-marker row)
-    and unknown-term queries (no candidate blocks at all)."""
+    """return_stats rides the production fused kernel (ADVICE r4); its
+    (blocks_total, blocks_kept) must equal the counts of the Catalyst
+    oracle's phases — including for queries that keep zero blocks (the
+    null-marker row) and unknown-term queries (no candidate blocks at
+    all)."""
     from bayesian_bm25_js_spark.operators.compression import block_max_table
-    from bayesian_bm25_js_spark.operators.wand import wand_topk
+    from bayesian_bm25_js_spark.operators.wand import ROUND_SLACK, wand_topk
 
     corpus, idx = rnd_index
     queries = [["w0", "w1"], ["w40", "w49"], ["nope"], ["w2", "w2", "w3"]]
     qdf = queries_to_df(spark, queries)
     bm = block_max_table(idx, 64)
+    k = 3
 
-    def stats_of(fused):
-        _, stats = wand_topk(
-            idx, qdf, 3, block_max=bm, block_size=64,
-            return_stats=True, fused=fused,
+    _, stats = wand_topk(
+        idx, qdf, k, block_max=bm, block_size=64, return_stats=True
+    )
+    got = {
+        r["query_id"]: (r["blocks_total"], r["blocks_kept"])
+        for r in stats.collect()
+    }
+
+    bounds, tau = _bounds_and_tau(bm, qdf, k)
+    keep = F.col("ub") >= F.col("tau") - F.lit(ROUND_SLACK)
+    expected = {
+        r["query_id"]: (r["blocks_total"], r["blocks_kept"])
+        for r in bounds.join(tau, "query_id")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("blocks_total"),
+            F.sum(F.when(keep, 1).otherwise(0)).alias("blocks_kept"),
         )
-        return {
-            r["query_id"]: (r["blocks_total"], r["blocks_kept"])
-            for r in stats.collect()
-        }
-
-    assert stats_of(True) == stats_of(False)
+        .collect()
+    }
+    assert got == expected
+    # the unknown-term query has no candidate blocks on either side
+    assert set(got) == {0, 1, 3}, got
 
 
 def test_survivor_pack_shift_scales_past_int32_blocks():

@@ -189,47 +189,56 @@ def test_packed_query_path_has_no_doc_stats_join(spark, idx, tmp_path):
 
 
 def test_postings_scan_idf_carry_modes(spark, idx):
-    """carry_idf default (r5): OFF — the idf column is read straight
-    out of the denormalized postings cache and score_queries adds NO
-    per-batch term_stats scan (same-session A/Bs measured the carried
-    variant as a fixed per-batch cost with no scan saving: warm WAND
-    CPU 12.4s->8.2s off at 50k docs, neutral at 300k). The opt-in
-    carry_idf=True parameter (r6: was the invisible SPARK_CARRY_IDF
-    env switch) must still column-prune idf out of the postings scan
-    leaves — the variant a larger-shape A/B would re-enable."""
+    """idf is read straight out of the denormalized postings cache:
+    the postings scan leaf carries it, so score_queries adds NO
+    per-batch term_stats scan (carrying idf on the query side measured
+    as a fixed per-batch cost with no scan saving: warm WAND CPU
+    12.4s->8.2s without it at 50k docs, neutral at 300k)."""
     from bayesian_bm25_js_spark.plans.audit import inmemory_scan_columns
-    from bayesian_bm25_js_spark.operators.compression import block_max_table
-    from bayesian_bm25_js_spark.operators.wand import wand_topk
 
-    # default: idf comes from the cache scan
     scores = score_queries(idx, queries_to_df(spark, [["cat", "dog"]]))
     scans = [c for c in inmemory_scan_columns(scores) if "tf" in c]
     assert scans, "no postings InMemoryTableScan found in plan"
     assert any("idf" in names for names in scans), scans
 
-    # opt-in carry: postings scan leaves are idf-free (column pruned)
-    scores = score_queries(
-        idx, queries_to_df(spark, [["cat", "dog"]]), carry_idf=True
-    )
-    scans = [c for c in inmemory_scan_columns(scores) if "tf" in c]
-    assert scans, "no postings InMemoryTableScan found in plan"
-    for names in scans:
-        assert "idf" not in names, names
 
-    # persist block-max as production does: its BUILD legitimately
-    # reads idf (max_contrib); cached, the wand plan's only postings
-    # scan is the scoring join side, which must be idf-free under carry
-    bm = block_max_table(idx, 16).persist()
-    bm.count()
-    ranked = wand_topk(
-        idx, queries_to_df(spark, [["cat", "dog"]]), 3, block_max=bm,
-        carry_idf=True,
+def test_packed_wand_pushes_string_term_filter(spark, idx, tmp_path):
+    """WAND over the packed store shares the exhaustive scorer's
+    postings probe, so its term filter reaches the packed parquet scan
+    as a string In-predicate: non-matching row groups are skipped
+    before any varint decode, exactly as for score_queries."""
+    from bayesian_bm25_js_spark.operators.wand import wand_topk
+    from bayesian_bm25_js_spark.sources.index_store import (
+        load_packed_index,
+        save_index,
     )
-    wscans = [c for c in inmemory_scan_columns(ranked) if "tf" in c]
-    bm.unpersist()
-    assert wscans, "no postings InMemoryTableScan found in wand plan"
-    for names in wscans:
-        assert "idf" not in names, names
+
+    path = str(tmp_path / "pidx")
+    save_index(idx, path, packed=True, block_size=64)
+    pidx, _ = load_packed_index(spark, path)
+    qdf = queries_to_df(spark, [["cat", "dog"]])
+    # the packed-blob scan (the only one reading doc_deltas)
+    packed_scan = r"FileScan parquet \[[^\]]*doc_deltas[^\n]*PushedFilters: \[In\(term, \[cat,dog\]\)"
+    for ranked in (
+        top_k(score_queries(pidx, qdf, terms_filter=["cat", "dog"]), 3),
+        wand_topk(pidx, qdf, 3, block_size=64, terms_filter=["cat", "dog"]),
+    ):
+        plan = plan_string(ranked, mode="simple")
+        assert re.search(packed_scan, plan), plan
+
+
+def test_exhaustive_retrieve_filters_postings_scan(spark):
+    """strategy="exhaustive" In-filters the cached postings on the
+    batch's interned terms, as auto_topk's exhaustive branch does, so
+    the sorted cache skips non-matching batches instead of scanning
+    every posting."""
+    from bayesian_bm25_js_spark.operators.scorer import BayesianBM25SparkScorer
+
+    s = BayesianBM25SparkScorer(alpha=1.0, beta=0.5, base_rate=0.05)
+    s.index(docs_df(spark, SMALL_CORPUS))
+    out = s.retrieve([["cat"], ["dog", "the"]], 3, strategy="exhaustive")
+    plan = plan_string(out, mode="simple")
+    assert re.search(r"InMemoryTableScan \[[^\]]*\], \[term_id#\d+L? IN \(", plan), plan
 
 
 def test_wand_topk_one_exchange_partial_limit(spark, idx):
